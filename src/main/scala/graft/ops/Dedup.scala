@@ -1365,14 +1365,16 @@ object Dedup {
     * shuffle at all, leaving the explode+hash recomputed from scan.
     *
     * That 2× computation is the DELIBERATE default, decided by
-    * measurement (round 7, `tools.SpanAb`, same-JVM interleaved
-    * min-of-3 at x10): checkpoint-materializing the gram frame so both
-    * branches read blocks measured 9.96 s vs 3.11 s for the recompute —
-    * 3.2× slower. The bytes explain it: the gram stream is ~28 B per
-    * corpus CHARACTER, so materializing writes (and re-reads) ~28× the
-    * corpus's own bytes through the block manager, while the recompute
-    * re-scans the corpus once more (columnar, pruned to id+text) and
-    * replays one compiled projection ([[graft.functions.GramAnchors]]).
+    * measurement (round 7, same-JVM interleaved min-of-3 at x10;
+    * SCALING.md, "Round-7 reversal, measured: the span miners keep the
+    * 2× gram-stream computation"): checkpoint-materializing the gram
+    * frame so both branches read blocks measured 9.96 s vs 3.11 s for
+    * the recompute — 3.2× slower. The bytes explain it: the gram
+    * stream is ~28 B per corpus CHARACTER, so materializing writes (and
+    * re-reads) ~28× the corpus's own bytes through the block manager,
+    * while the recompute re-scans the corpus once more (columnar,
+    * pruned to id+text) and replays one compiled projection
+    * ([[graft.functions.GramAnchors]]).
     * The same arithmetic holds at 100 TB on object storage: two pruned
     * corpus scans ≪ one write + two reads of a 28×-corpus-sized
     * stream. `materialize = true` remains available for inputs where a

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -40,15 +40,47 @@ object Graph {
 
   /** Fixed-iteration damped PageRank over a DIRECTED edge list
     * (symmetrize for undirected graphs). Nodes = every id appearing
-    * as src or dst; out-degree-0 (dangling) nodes receive rank but
+    * as src or dst; zero-degree (dangling) nodes receive rank but
     * redistribute none — the standard leaky variant; add reverse
     * edges or self-loops if mass conservation matters.
     *
-    * Returns (node, out_deg, rank) after `iters` rounds from the
-    * uniform 1/N start. */
+    * Returns (node, out_deg, rank) after `iters` rounds — (node,
+    * w_deg, rank) when weighted. The options compose:
+    *
+    *  - `weightCol`: WEIGHTED PageRank — rank splits over out-edges
+    *    proportionally to edge weight (rank · w / w_deg instead of
+    *    rank / out_deg). Weights are edge MULTIPLICITIES, cast to long
+    *    (a fractional weight truncates toward zero — the weighted
+    *    [[louvain]] convention), so an integer-weighted edge behaves
+    *    exactly like w parallel unit edges. Non-negativity is
+    *    VALIDATED (one one-row aggregate over the truncated edges): a
+    *    negative multiplicity would silently corrupt every rank.
+    *  - `start(node, rank)`: WARM start — the crawl-delta restart from
+    *    a previous rank vector, which reaches the moved fixed point in
+    *    far fewer rounds than a cold start (SCALING.md, "PageRank
+    *    warm-start: measured rounds saved"). Nodes absent from `start`
+    *    begin at the cold start value; rows for departed nodes are
+    *    ignored. Exact-replay law (GraphSpec asserts it): on an
+    *    unchanged graph, `pageRank(e, T2, start = pageRank(e, T1))` is
+    *    BIT-IDENTICAL to `pageRank(e, T1 + T2)`.
+    *  - `seeds(node)`: PERSONALIZED PageRank — teleport mass returns
+    *    only to the seed set instead of uniformly (the TrustRank
+    *    quality-propagation shape). Seeds absent from the graph are
+    *    ignored; nodes unreachable from any seed legitimately score 0.
+    *
+    * Each node carries its teleport term and start value as columns:
+    * (1−d)/N and 1/N, or (1−d)/ns and 1/ns on the ns seeds and 0
+    * elsewhere. The per-term 10⁻¹² quantization + DECIMAL(38,0) exact
+    * sum (see the object doc) gives every variant a full unrolled
+    * oracle ([[pageRankSql]], [[pageRankWarmSql]],
+    * [[personalizedPageRankSql]], [[pageRankWeightedSql]]). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, damping: Double = 0.85): DataFrame = {
+               iters: Int, damping: Double = 0.85,
+               weightCol: Option[String] = None,
+               start: Option[DataFrame] = None,
+               seeds: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
+    val degCol = if (weightCol.isEmpty) "out_deg" else "w_deg"
     // Iterative lineage discipline (the [[Dedup.connectedComponents]]
     // pattern, and the reason this is not a naive loop): rank_{t+1}
     // references rank_t TWICE (directly and through its contribution
@@ -58,97 +90,68 @@ object Graph {
     // frame is truncated once and each round's rank frame truncates
     // before the next builds on it, with superseded checkpoint files
     // rotated away in reliable mode.
-    val e = Checkpointing.truncate(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")))
-    val outDeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("out_deg"))
-    val nodes = e.select(col("src").as("node"))
+    val e = Checkpointing.truncate(edges.select(
+      Seq(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst")) ++
+        weightCol.map(w => col(w).cast("long").as("w")): _*))
+    if (weightCol.isDefined) {
+      val minW = e.agg(min(col("w"))).head().get(0)
+      require(minW == null || minW.asInstanceOf[Long] >= 0L,
+        s"edge weights must be non-negative multiplicities, found min $minW")
+    }
+    val deg = e.groupBy(col("src").as("node")).agg(
+      (if (weightCol.isEmpty) count(lit(1)) else sum(col("w"))).as(degCol))
+    val graph = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node"))).distinct()
-      .join(outDeg, Seq("node"), "left")
-      .withColumn("out_deg", coalesce(col("out_deg"), lit(0L)))
-    // N rides along as a broadcast literal-free cross join (one-row agg)
-    val nRow = nodes.agg(count(lit(1)).as("__n"))
-    var ranks = Checkpointing.truncate(nodes.crossJoin(broadcast(nRow))
-      .select(col("node"), col("out_deg"),
-        (lit(1.0) / col("__n")).as("rank"), col("__n")))
+      .join(deg, Seq("node"), "left")
+      .withColumn(degCol, coalesce(col(degCol), lit(0L)))
+    // N (or ns) rides along as a broadcast one-row aggregate
+    val nodes = seeds match {
+      case None =>
+        graph.crossJoin(broadcast(graph.agg(count(lit(1)).as("__n"))))
+          .select(col("node"), col(degCol),
+            (lit(1.0 - damping) / col("__n")).as("__tele"),
+            (lit(1.0) / col("__n")).as("__r0"))
+      case Some(sd) =>
+        val seeded = graph
+          .join(sd.select(col("node").cast("long").as("node")).distinct()
+            .withColumn("__seed", lit(true)), Seq("node"), "left")
+          .withColumn("__seed", coalesce(col("__seed"), lit(false)))
+        seeded.crossJoin(broadcast(
+            seeded.agg(sum(col("__seed").cast("long")).as("__ns"))))
+          .select(col("node"), col(degCol),
+            when(col("__seed"), lit(1.0 - damping) / col("__ns"))
+              .otherwise(lit(0.0)).as("__tele"),
+            when(col("__seed"), lit(1.0) / col("__ns"))
+              .otherwise(lit(0.0)).as("__r0"))
+    }
+    val init = start match {
+      case None => nodes.withColumnRenamed("__r0", "rank")
+      case Some(st) => nodes
+        .join(st.select(col("node").cast("long").as("node"),
+          col("rank").as("__s0")), Seq("node"), "left")
+        .select(col("node"), col(degCol), col("__tele"),
+          coalesce(col("__s0"), col("__r0")).as("rank"))
+    }
+    var ranks = Checkpointing.truncate(init)
     for (_ <- 1 to iters) {
-      val contribs = e
-        .join(ranks.where(col("out_deg") > 0)
-          .select(col("node").as("src"),
-            (col("rank") / col("out_deg")).as("__c")), Seq("src"))
+      val share = ranks.where(col(degCol) > 0)
+        .select(col("node").as("src"), (col("rank") / col(degCol)).as("__c"))
+      val term = if (weightCol.isEmpty) col("__c") else col("__c") * col("w")
+      val contribs = e.join(share, Seq("src"))
         .groupBy(col("dst").as("node"))
-        .agg((sum(floor(col("__c") * lit(1.0e12)).cast("long")
+        .agg((sum(floor(term * lit(1.0e12)).cast("long")
             .cast(DecimalType(38, 0)))
           .cast("string").cast("double") / lit(1.0e12)).as("__s"))
       val prev = ranks
       ranks = Checkpointing.truncate(ranks
         .join(contribs, Seq("node"), "left")
-        .select(col("node"), col("out_deg"),
-          (lit(1.0 - damping) / col("__n") +
-            lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank"),
-          col("__n")))
+        .select(col("node"), col(degCol), col("__tele"),
+          (col("__tele") + lit(damping) * coalesce(col("__s"), lit(0.0)))
+            .as("rank")))
       Checkpointing.release(prev) // superseded round's stable files
     }
-    ranks.select(col("node"), col("out_deg"), col("rank"))
-  }
-
-  /** WARM-STARTED PageRank (round-13 verdict stretch #9 — incremental
-    * centrality): run `iters` power rounds from an EXPLICIT start
-    * vector instead of uniform. The crawl-delta scenario: after edges
-    * land, restart from the PREVIOUS rank vector — the fixed point
-    * moved a little, so far fewer rounds reach the same tolerance
-    * than a cold uniform start (measured in
-    * `tools.PageRankWarmAb`). Nodes absent from `startRanks` (the
-    * delta's new nodes) start at 1/N of THIS graph; extra rows in
-    * `startRanks` for departed nodes are ignored.
-    *
-    * Exact-replay law (GraphSpec asserts it): on an unchanged graph,
-    * `pageRankFrom(e, pageRank(e, T1), T2)` is BIT-IDENTICAL to
-    * `pageRank(e, T1 + T2)` — the warm rounds continue the exact
-    * quantized sequence. Same per-term 10⁻¹² quantization +
-    * DECIMAL(38,0) exact sum as [[pageRank]], so the full unrolled
-    * oracle exists for the whole cold-then-warm history (q235). */
-  def pageRankFrom(edges: DataFrame, srcCol: String, dstCol: String,
-                   startRanks: DataFrame, iters: Int,
-                   damping: Double = 0.85): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = Checkpointing.truncate(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")))
-    val outDeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("out_deg"))
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct()
-      .join(outDeg, Seq("node"), "left")
-      .withColumn("out_deg", coalesce(col("out_deg"), lit(0L)))
-    val nRow = nodes.agg(count(lit(1)).as("__n"))
-    val start = startRanks
-      .select(col("node").cast("long").as("node"), col("rank").as("__r0"))
-    var ranks = Checkpointing.truncate(nodes.crossJoin(broadcast(nRow))
-      .join(start, Seq("node"), "left")
-      .select(col("node"), col("out_deg"),
-        coalesce(col("__r0"), lit(1.0) / col("__n")).as("rank"),
-        col("__n")))
-    for (_ <- 1 to iters) {
-      val contribs = e
-        .join(ranks.where(col("out_deg") > 0)
-          .select(col("node").as("src"),
-            (col("rank") / col("out_deg")).as("__c")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg((sum(floor(col("__c") * lit(1.0e12)).cast("long")
-            .cast(DecimalType(38, 0)))
-          .cast("string").cast("double") / lit(1.0e12)).as("__s"))
-      val prev = ranks
-      ranks = Checkpointing.truncate(ranks
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"), col("out_deg"),
-          (lit(1.0 - damping) / col("__n") +
-            lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank"),
-          col("__n")))
-      Checkpointing.release(prev)
-    }
-    ranks.select(col("node"), col("out_deg"), col("rank"))
+    ranks.select(col("node"), col(degCol), col("rank"))
   }
 
   /** DuckDB twin of a cold-then-warm history: `coldIters` rounds over
@@ -216,58 +219,6 @@ object Graph {
        |),
        |$warm
        |SELECT node, out_deg, rank FROM wr$warmIters""".stripMargin
-  }
-
-  /** Personalized (seeded) PageRank: teleport mass returns only to
-    * the seed set instead of uniformly — the quality-propagation
-    * shape (score every page by its link proximity to a TRUSTED seed
-    * list, the TrustRank idea), which is how a crawl pipeline turns a
-    * small curated domain list into a corpus-wide prior. Seeds not
-    * present in the graph are ignored; nodes unreachable from any
-    * seed legitimately score 0. Same per-round accounting and DECIMAL
-    * determinism as [[pageRank]]. */
-  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
-                           seeds: DataFrame, seedCol: String, iters: Int,
-                           damping: Double = 0.85): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = Checkpointing.truncate(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")))
-    val outDeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("out_deg"))
-    val seedSet = seeds.select(col(seedCol).cast("long").as("node"))
-      .distinct().withColumn("__seed", lit(true))
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct()
-      .join(outDeg, Seq("node"), "left")
-      .withColumn("out_deg", coalesce(col("out_deg"), lit(0L)))
-      .join(seedSet, Seq("node"), "left")
-      .withColumn("__seed", coalesce(col("__seed"), lit(false)))
-    val nsRow = nodes.agg(sum(col("__seed").cast("long")).as("__ns"))
-    def teleport: Column =
-      when(col("__seed"), lit(1.0 - damping) / col("__ns")).otherwise(lit(0.0))
-    var ranks = Checkpointing.truncate(nodes.crossJoin(broadcast(nsRow))
-      .select(col("node"), col("out_deg"), col("__seed"), col("__ns"),
-        when(col("__seed"), lit(1.0) / col("__ns")).otherwise(lit(0.0))
-          .as("rank")))
-    for (_ <- 1 to iters) {
-      val contribs = e
-        .join(ranks.where(col("out_deg") > 0)
-          .select(col("node").as("src"),
-            (col("rank") / col("out_deg")).as("__c")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg((sum(floor(col("__c") * lit(1.0e12)).cast("long")
-            .cast(DecimalType(38, 0)))
-          .cast("string").cast("double") / lit(1.0e12)).as("__s"))
-      val prev = ranks
-      ranks = Checkpointing.truncate(ranks
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"), col("out_deg"), col("__seed"), col("__ns"),
-          (teleport + lit(damping) * coalesce(col("__s"), lit(0.0)))
-            .as("rank")))
-      Checkpointing.release(prev)
-    }
-    ranks.select(col("node"), col("out_deg"), col("rank"))
   }
 
   /** DuckDB twin of [[personalizedPageRank]] (`edgesCte` defines
@@ -650,7 +601,7 @@ object Graph {
     *  - SYNCHRONOUS rounds, two regimes, both sweep-order-free
     *    (every node decides simultaneously against the round-(t−1)
     *    assignment):
-    *    THIS operator and [[louvainWeighted]] run the FINE regime —
+    *    the first level (base nodes) runs the FINE regime —
     *    in round t only nodes with `node % 2 == t % 2` may move,
     *    either label direction, no global guard: at base-node
     *    granularity simultaneous collisions wash out (measured: the
@@ -659,7 +610,7 @@ object Graph {
     *    shared targets make every all-or-nothing round net-negative,
     *    while unguarded fine rounds find the same 22 communities
     *    the operator has produced since it shipped).
-    *    [[louvainMultiLevel]]'s CONTRACTED levels run the COARSE
+    *    the CONTRACTED levels (`levels > 1`) run the COARSE
     *    regime — alternating-direction label rounds (odd t: only
     *    smaller labels; even t: only larger — swaps impossible
     *    within a round, and alternation removes the one-directional
@@ -686,92 +637,87 @@ object Graph {
     * to (node, neighbor-community) weights) plus community-table-
     * sized joins — the q203 lineage discipline (truncate + release)
     * keeps the T-round plan linear. Input edges must be SYMMETRIZED
-    * (both directions present) with no self-loops; weights are edge
-    * multiplicities (pass pre-aggregated multi-edges as repeated
-    * rows or symmetrize upstream).
+    * (both directions present).
     *
-    * Returns (node, community) after `iters` rounds from singleton
-    * start. Communities are labeled by one member's node id (not
+    *  - `weightCol = None`: unit edges; self-loops are dropped and
+    *    parallel rows count as multiplicities.
+    *  - `weightCol = Some(w)`: `w` must be a non-negative integral
+    *    column (co-occurrence counts, contracted multi-edge
+    *    multiplicities), cast to long. Self-loop rows are KEPT: they
+    *    count in degrees and 2m but never attract moves (their weight
+    *    travels with the node, so it cancels out of the gain argmax) —
+    *    the convention the contracted levels rely on.
+    *  - `levels > 1`: the FULL "fast unfolding" — the local-move phase
+    *    alternated with community CONTRACTION (Blondel et al.'s phase
+    *    2): each contraction collapses every community to one
+    *    super-node (intra-community weight becomes the super-node's
+    *    self-loop, inter-community weights sum into super-edges; 2m
+    *    and the degree total are preserved exactly, so modularity is
+    *    the SAME objective at every level), then `iters` local-move
+    *    rounds rerun on the super-graph, whose merges are exactly what
+    *    single-level moves cannot express (a whole community re-homing
+    *    at once). The expansion back to base nodes is a
+    *    label-composition join per level; contraction is pure
+    *    exact-integer aggregation, so the whole run stays
+    *    deterministic and oracle-replayable.
+    *
+    * Returns (node, community) over BASE nodes, from singleton start.
+    * Communities are labeled by one member's node id (not
     * canonicalized to min-member — callers wanting canonical labels
-    * re-label with a min-over-community, as the catalog query does). */
+    * re-label with a min-over-community, as the catalog query does).
+    * The warm start and the stability stop are parameters of the
+    * [[louvainLevel]] core (the [[GraphState]] community pair's
+    * path). */
   def louvain(edges: DataFrame, srcCol: String, dstCol: String,
-              iters: Int): DataFrame = {
+              iters: Int, weightCol: Option[String] = None,
+              levels: Int = 1): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    louvainLevel(
-      edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"))
+    require(levels >= 1, s"levels must be >= 1, got $levels")
+    var e = louvainEdges(edges, srcCol, dstCol, weightCol)
+    var assign = louvainLevel(e, iters, coarse = false)._1 // base node → current label
+    var lastUp = assign // THIS level's node id → current label
+    for (_ <- 2 to levels) {
+      val eC = Checkpointing.truncate(e
+        .join(lastUp.select(col("node").as("src"),
+          col("community").as("__cs")), Seq("src"))
+        .join(lastUp.select(col("node").as("dst"),
+          col("community").as("__cd")), Seq("dst"))
+        .groupBy(col("__cs").as("src"), col("__cd").as("dst"))
+        .agg(sum("w").as("w")))
+      val up = louvainLevel(eC, iters, coarse = true)._1
+      val prev = assign
+      assign = Checkpointing.truncate(assign
+        .select(col("node"), col("community").as("__c"))
+        .join(up.select(col("node").as("__c"), col("community")),
+          Seq("__c"))
+        .select(col("node"), col("community")))
+      Checkpointing.release(prev)
+      lastUp = up
+      e = eC
+    }
+    assign
+  }
+
+  /** [[louvain]]'s input normalization to (src, dst, w): unit edges
+    * drop self-loops and weigh 1; weighted edges keep every row. */
+  private[graft] def louvainEdges(edges: DataFrame, srcCol: String,
+                                  dstCol: String,
+                                  weightCol: Option[String]): DataFrame = {
+    val ends = Seq(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"))
+    weightCol match {
+      case None => edges.select(ends: _*)
         .where(col("src") =!= col("dst"))
-        .withColumn("w", lit(1L)),
-      iters, coarse = false)._1
+        .withColumn("w", lit(1L))
+      case Some(w) => edges.select(ends :+ col(w).cast("long").as("w"): _*)
+    }
   }
 
-  /** [[louvain]] over WEIGHTED symmetrized edges (`weightCol` must be
-    * a non-negative integral column — co-occurrence counts, contracted
-    * multi-edge multiplicities). Self-loop rows count in degrees and
-    * 2m but never attract moves (their weight travels with the node,
-    * so it cancels out of the gain argmax) — the same convention the
-    * contracted levels of [[louvainMultiLevel]] rely on. */
-  def louvainWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-                      weightCol: String, iters: Int): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    louvainLevel(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"),
-        col(weightCol).cast("long").as("w")),
-      iters, coarse = false)._1
-  }
-
-  /** WARM-STARTED [[louvain]] (the q235 [[pageRankFrom]] posture
-    * applied to community detection): the fine local-move rounds run
-    * seeded from a PREVIOUS assignment `seed(node, community)` instead
-    * of singletons — after a crawl delta lands, communities that the
-    * delta doesn't touch re-stabilize in zero moves (their members see
-    * no strictly-improving candidate, and Q-improving moves near the
-    * delta only refine the wound's neighborhood), so the maintained
-    * assignment needs far fewer rounds than a from-scratch run
-    * (tools/GraphScaleSweep's comm row measures the rounds saved).
-    * Nodes absent from the seed (new arrivals) enter as singletons;
-    * seed rows for nodes no longer in the graph are ignored. The run
-    * is the SAME deterministic parity-schedule process as [[louvain]]
-    * — only cm0 differs — so the entire warm history replays in the
-    * oracle ([[louvainWarmChainSql]]) bit-identically. Same
-    * symmetrized-input contract as [[louvain]]. */
-  def louvainWarm(edges: DataFrame, srcCol: String, dstCol: String,
-                  seed: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    louvainLevel(
-      edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"))
-        .where(col("src") =!= col("dst"))
-        .withColumn("w", lit(1L)),
-      iters, coarse = false, seed = Some(seed))._1
-  }
-
-  /** [[louvainWarm]] with the STABILITY stop the maintained pair runs
-    * under: fine rounds stop early once two consecutive rounds (one
-    * per parity class) move zero nodes — from such a state every later
-    * round is provably a no-op (same state + same parity ⇒ same
-    * argmax), so an oracle that unrolls the full `maxRounds` stays
-    * bit-identical whether or not the stop fires. Returns (assignment,
-    * rounds actually run) — `maxRounds − rounds` is the warm start's
-    * measured saving (tools/GraphScaleSweep). `seed = None` is the
-    * cold start. */
-  def louvainStable(edges: DataFrame, srcCol: String, dstCol: String,
-                    seed: Option[DataFrame], maxRounds: Int): (DataFrame, Int) = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    louvainLevel(
-      edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst"))
-        .where(col("src") =!= col("dst"))
-        .withColumn("w", lit(1L)),
-      maxRounds, coarse = false, seed = seed, stopAtStable = true)
-  }
-
-  /** [[louvain]]/[[louvainWarm]] over an ALREADY-CANONICAL edge frame
-    * `e(a, b)` (symmetrized internally) — the [[GraphState]] community
-    * pair's init/rebuild/advance path, where the input is canonical by
-    * construction and must not pay a re-canonicalization. Runs under
-    * the [[louvainStable]] stop rule. */
+  /** [[louvainLevel]] (optionally warm) over an ALREADY-CANONICAL
+    * edge frame `e(a, b)` (symmetrized internally) — the [[GraphState]]
+    * community pair's init/rebuild/advance path, where the input is
+    * canonical by construction and must not pay a re-canonicalization.
+    * Runs under the stability stop. */
   private[ops] def louvainCanon(canon: DataFrame, iters: Int,
                                 seed: Option[DataFrame]): DataFrame =
     louvainLevel(
@@ -786,7 +732,7 @@ object Graph {
     * stored canonical edges (broadcast-probed, zero |E| shuffle —
     * [[advanceTriangleCore]]'s discipline), then re-run at most
     * `iters` warm parity rounds seeded from the previous assignment
-    * under the [[louvainStable]] stop rule. The advance is
+    * under [[louvainLevel]]'s stability stop. The advance is
     * a pure function of (new edge set, previous assignment), which is
     * exactly what survives a crash between the pair's two swaps — so
     * the recovery rebuild is bit-identical to the uncrashed advance
@@ -800,63 +746,35 @@ object Graph {
     (newE, louvainCanon(newE, iters, seed = Some(prevComm)))
   }
 
-  /** The FULL "fast unfolding": [[louvain]]'s local-move phase
-    * alternated with community CONTRACTION (Blondel et al.'s phase 2)
-    * for `levels` levels — each contraction collapses every community
-    * to one super-node (intra-community weight becomes the
-    * super-node's self-loop, inter-community weights sum into
-    * super-edges; 2m and the degree sequence's total are preserved
-    * exactly, so modularity is the SAME objective at every level),
-    * then the local moves rerun on the super-graph, whose merges are
-    * exactly what single-level moves cannot express (a whole
-    * community re-homing at once). The expansion back to base nodes
-    * is a label-composition join per level. Contraction is pure
-    * exact-integer aggregation and the level step is [[louvain]]'s,
-    * so the whole multi-level run stays deterministic and
-    * oracle-replayable. Returns (node, community) over BASE nodes;
-    * `levels = 1` is exactly [[louvain]]. */
-  def louvainMultiLevel(edges: DataFrame, srcCol: String, dstCol: String,
-                        itersPerLevel: Int, levels: Int = 2): DataFrame = {
-    require(itersPerLevel >= 1, s"itersPerLevel must be >= 1: $itersPerLevel")
-    require(levels >= 1, s"levels must be >= 1: $levels")
-    var e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .where(col("src") =!= col("dst"))
-      .withColumn("w", lit(1L))
-    var assign = louvainLevel(e, itersPerLevel, coarse = false)._1 // base node → current label
-    var lastUp = assign // THIS level's node id → current label
-    for (_ <- 2 to levels) {
-      val eC = Checkpointing.truncate(e
-        .join(lastUp.select(col("node").as("src"),
-          col("community").as("__cs")), Seq("src"))
-        .join(lastUp.select(col("node").as("dst"),
-          col("community").as("__cd")), Seq("dst"))
-        .groupBy(col("__cs").as("src"), col("__cd").as("dst"))
-        .agg(sum("w").as("w")))
-      val up = louvainLevel(eC, itersPerLevel, coarse = true)._1
-      val prev = assign
-      assign = Checkpointing.truncate(assign
-        .select(col("node"), col("community").as("__c"))
-        .join(up.select(col("node").as("__c"), col("community")),
-          Seq("__c"))
-        .select(col("node"), col("community")))
-      Checkpointing.release(prev)
-      lastUp = up
-      e = eC
-    }
-    assign
-  }
-
   /** One local-move level over a WEIGHTED symmetrized edge frame
-    * (src, dst, w). Self-loop rows — the contracted form's internal
-    * weight — count in degrees and 2m (the standard convention that
-    * keeps modularity the same objective across levels) but never in
-    * k_{i→c}: a node's own internal weight moves WITH it, so it
-    * cancels out of the gain argmax. */
-  private def louvainLevel(edges: DataFrame, iters: Int,
-                           coarse: Boolean,
-                           seed: Option[DataFrame] = None,
-                           stopAtStable: Boolean = false): (DataFrame, Int) = {
+    * (src, dst, w) — the core every Louvain path runs. Self-loop rows
+    * — the contracted form's internal weight — count in degrees and 2m
+    * (the standard convention that keeps modularity the same objective
+    * across levels) but never in k_{i→c}: a node's own internal weight
+    * moves WITH it, so it cancels out of the gain argmax.
+    *
+    *  - `seed(node, community)`: WARM start (the warm [[pageRank]]
+    *    posture applied to community detection) — the fine rounds
+    *    start from a PREVIOUS assignment instead of singletons, so
+    *    after a crawl delta lands, communities the delta doesn't touch
+    *    re-stabilize in zero moves and only the delta's neighborhood
+    *    re-settles (GraphScaleSweep's comm row measures the rounds
+    *    saved). Graph nodes absent from the seed enter as singletons;
+    *    seed rows off the graph drop. Only cm0 differs from the cold
+    *    run, so a whole warm history replays in the oracle
+    *    ([[louvainWarmChainSql]]) bit-identically.
+    *  - `stopAtStable`: fine rounds stop early once two consecutive
+    *    rounds (one per parity class) move zero nodes — from such a
+    *    state every later round is provably a no-op (same state + same
+    *    parity ⇒ same argmax), so an oracle that unrolls all `iters`
+    *    rounds stays bit-identical whether or not the stop fires.
+    *
+    * Returns (assignment, rounds actually run) — with the stop,
+    * `iters − rounds` is the warm start's measured saving. */
+  private[graft] def louvainLevel(edges: DataFrame, iters: Int,
+                                  coarse: Boolean,
+                                  seed: Option[DataFrame] = None,
+                                  stopAtStable: Boolean = false): (DataFrame, Int) = {
     val dec = DecimalType(38, 0)
     val e = Checkpointing.truncate(edges)
     val eNoSelf = e.where(col("src") =!= col("dst"))
@@ -988,7 +906,7 @@ object Graph {
       // same arithmetic, same results as the in-plan CASE the oracle
       // replays.
       if (!coarse) {
-        // stability stop ([[louvainStable]]): two consecutive no-move
+        // stability stop (`stopAtStable`): two consecutive no-move
         // rounds (one per parity class) prove every later round a
         // no-op, so stopping is invisible to a fixed-depth oracle
         // unroll. The proposal is materialized FIRST and the moved
@@ -2472,66 +2390,6 @@ object Graph {
           lit(2.0) * col("n_triangles") / (col("degree") * (col("degree") - 1)))
           .otherwise(lit(0.0)).as("clustering"))
     (newE, stats)
-  }
-
-  /** WEIGHTED PageRank: each node's rank splits over its out-edges
-    * proportionally to edge WEIGHT (contribution = rank · w / wdeg
-    * instead of rank / out_deg) — centrality over the co-order
-    * multiplicity graph where [[louvainWeighted]] already clusters
-    * (round-12 verdict stretch #9). Weight-≡-parallel-edges law: an
-    * integer-weighted edge behaves exactly like w parallel unit
-    * edges (the spec asserts it), so the operator is the natural
-    * multigraph reading of [[pageRank]]. Same per-term 10⁻¹²
-    * quantization + DECIMAL(38,0) exact sum, so the full unrolled
-    * oracle exists; same per-round lineage discipline. Weights are
-    * edge MULTIPLICITIES: `wCol` is cast to long (a fractional weight
-    * TRUNCATES toward zero — the [[louvainWeighted]] convention; scale
-    * fractional affinities to integer grains upstream), and the
-    * non-negativity precondition is VALIDATED (one cheap one-row
-    * aggregate over the edge pass [[pageRankWeighted]] already makes
-    * for w_deg) — a negative multiplicity would silently corrupt
-    * every rank, so it fails fast instead. wdeg-0 nodes are dangling
-    * (leaky, as in [[pageRank]]). Returns (node, w_deg, rank). */
-  def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-                       wCol: String, iters: Int,
-                       damping: Double = 0.85): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = Checkpointing.truncate(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"),
-        col(wCol).cast("long").as("w")))
-    val minW = e.agg(min(col("w"))).head().get(0)
-    require(minW == null || minW.asInstanceOf[Long] >= 0L,
-      s"edge weights must be non-negative multiplicities, found min $minW")
-    val wDeg = e.groupBy(col("src").as("node"))
-      .agg(sum(col("w")).as("w_deg"))
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct()
-      .join(wDeg, Seq("node"), "left")
-      .withColumn("w_deg", coalesce(col("w_deg"), lit(0L)))
-    val nRow = nodes.agg(count(lit(1)).as("__n"))
-    var ranks = Checkpointing.truncate(nodes.crossJoin(broadcast(nRow))
-      .select(col("node"), col("w_deg"),
-        (lit(1.0) / col("__n")).as("rank"), col("__n")))
-    for (_ <- 1 to iters) {
-      val contribs = e
-        .join(ranks.where(col("w_deg") > 0)
-          .select(col("node").as("src"),
-            (col("rank") / col("w_deg")).as("__r1")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg((sum(floor(col("__r1") * col("w") * lit(1.0e12)).cast("long")
-            .cast(DecimalType(38, 0)))
-          .cast("string").cast("double") / lit(1.0e12)).as("__s"))
-      val prev = ranks
-      ranks = Checkpointing.truncate(ranks
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"), col("w_deg"),
-          (lit(1.0 - damping) / col("__n") +
-            lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank"),
-          col("__n")))
-      Checkpointing.release(prev)
-    }
-    ranks.select(col("node"), col("w_deg"), col("rank"))
   }
 
   /** DuckDB twin of [[pageRankWeighted]] (`edgesCte` must define

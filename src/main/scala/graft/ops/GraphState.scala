@@ -133,9 +133,16 @@ object GraphState {
     val sWrite = java.util.concurrent.CompletableFuture.runAsync { () =>
       // common-pool threads don't reliably inherit the session
       // thread-local (ADVICE r15): pin it so planning paths that
-      // consult getActiveSession see THIS session, not a default one
+      // consult getActiveSession see THIS session, not a default one —
+      // and restore the worker's previous session afterwards, so the
+      // pooled thread doesn't carry this one into unrelated tasks
+      val prior = SparkSession.getActiveSession
       SparkSession.setActiveSession(newS.sparkSession)
-      newS.write.saveAsTable(s"${sT}__next")
+      try newS.write.saveAsTable(s"${sT}__next")
+      finally prior match {
+        case Some(p) => SparkSession.setActiveSession(p)
+        case None => SparkSession.clearActiveSession()
+      }
     }
     // propagate either failure before any stamp — without masking: a
     // join() failure inside a bare finally would REPLACE an in-flight
@@ -356,8 +363,8 @@ object GraphState {
   // ─────────────── communities as a maintained pair ───────────────
   // Third derived view on the maintained edge set (round-14 verdict
   // #3): `g_edges(a, b)` ground truth + `g_comm(node, community)` —
-  // the WARM-maintained Louvain assignment ([[Graph.louvainWarm]]:
-  // each advance re-runs `iters` deterministic fine rounds over the
+  // the WARM-maintained Louvain assignment ([[Graph.louvainLevel]]'s
+  // seed: each advance re-runs `iters` deterministic fine rounds over the
   // new edge set seeded from the previous assignment, so untouched
   // communities re-stabilize in zero moves and only the delta's
   // neighborhood re-settles). Unlike the triangle/k-core views the
@@ -406,8 +413,8 @@ object GraphState {
   /** Fold an edge delta into the community pair — AT MOST `iters` warm
     * rounds seeded from the stored assignment, stopping early once two
     * consecutive rounds move nothing ([[Graph.advanceCommCore]] /
-    * [[Graph.louvainStable]]'s rule — from such a state every later
-    * round is a no-op, so a fixed-depth oracle unroll matches whether
+    * [[Graph.louvainLevel]]'s stability stop — from such a state every
+    * later round is a no-op, so a fixed-depth oracle unroll matches whether
     * or not the stop fires), stage-both-swap-both. Re-delivering a
     * wave whose advance STABILIZED is the identity (the fixed-point
     * spec case); pick `iters` generous enough that advances stabilize

@@ -8,10 +8,11 @@ package graft.ops
   * context (the member key) around each query; code wrapped in
   * [[time]] then records `<member>.<label>` seconds, which Bench
   * appends to `BENCH_MEMBERS.json` as extra members — base and
-  * advance separate IN THE DRIVER ARTIFACT, the TriangleDeltaAb
-  * accounting without a side tool. Outside a bench pass (Verify,
-  * tests, library use) the context is empty and [[time]] is a
-  * zero-overhead pass-through.
+  * advance separate IN THE DRIVER ARTIFACT — the base-vs-advance split
+  * of SCALING.md's "Incremental triangle maintenance: measured vs the
+  * full re-count" tables, without a side tool. Outside a bench pass
+  * (Verify, tests, library use) the context is empty and [[time]] is
+  * a zero-overhead pass-through.
   *
   * Phase keys deliberately contain a '.' so the bench stdout rollup
   * can exclude them (they are components of an already-reported

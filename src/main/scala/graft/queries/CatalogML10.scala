@@ -230,8 +230,8 @@ object CatalogML10 {
     // Incremental PageRank warm-start (round-13 verdict stretch #9):
     // after a crawl delta lands, the power iteration restarts from the
     // PREVIOUS rank vector instead of uniform — fewer rounds to the
-    // same fixed point (tools/PageRankWarmAb measures the rounds
-    // saved). The unrolled oracle replays the ENTIRE two-phase
+    // same fixed point (SCALING.md, "PageRank warm-start: measured
+    // rounds saved"). The unrolled oracle replays the ENTIRE two-phase
     // history: 2 cold rounds on the base graph, then 2 warm rounds on
     // base ∪ delta seeded from the cold result (new nodes enter at
     // 1/N) — every quantized term bit-identical.
@@ -250,8 +250,8 @@ object CatalogML10 {
       }
       val cold = graft.ops.Graph.pageRank(
         sym(ok => ok % 5 =!= 0), "src", "dst", iters = 2)
-      graft.ops.Graph.pageRankFrom(sym(_ => lit(true)), "src", "dst",
-          cold.select(col("node"), col("rank")), iters = 2)
+      graft.ops.Graph.pageRank(sym(_ => lit(true)), "src", "dst",
+          iters = 2, start = Some(cold.select(col("node"), col("rank"))))
         .withColumnRenamed("node", "part_id")
         .orderBy("part_id")
     }, Some(graft.ops.Graph.pageRankWarmSql(

@@ -409,10 +409,11 @@ object CatalogML3 {
     // per-doc sum is exact DECIMAL. (unigramLogProb keeps the libm-log
     // variant for production; this one is the differential-testable
     // form.)
-    // materialize = true: the round-8 BigramAb verdict — one
+    // materialize = true: the round-8 verdict — one
     // checkpoint-truncated token frame beats the three independent
     // tokenize subtrees 6.71 s vs 8.51 s at x100 (tied at x1/x10);
-    // measured trade recorded in SCALING.md.
+    // SCALING.md, "Round-8 measurement: q118 (bigram LM) DOES
+    // materialize its token stream".
     ("q118_text_bigram_lm", (s: SparkSession, d: String) => {
       TextOps.bigramSurprisal(
           spread(table(s, d, "documents"), "doc_id"), "doc_id", "text",

@@ -485,8 +485,8 @@ object CatalogML4 {
       val seeds = table(s, d, "customer")
         .where(col("c_nationkey") === 1)
         .select(col("c_custkey").as("node"))
-      graft.ops.Graph.personalizedPageRank(edges, "src", "dst",
-          seeds, "node", iters = 3)
+      graft.ops.Graph.pageRank(edges, "src", "dst", iters = 3,
+          seeds = Some(seeds))
         .orderBy("node")
     }, Some(
       graft.ops.Graph.personalizedPageRankSql(

@@ -189,8 +189,8 @@ object CatalogML8 {
         .distinct()
       val edges = e0.select(col("c").as("src"), col("s2").as("dst"))
         .unionAll(e0.select(col("s2").as("src"), col("c").as("dst")))
-      val res = graft.ops.Graph.louvainMultiLevel(edges, "src", "dst",
-        itersPerLevel = 3, levels = 2)
+      val res = graft.ops.Graph.louvain(edges, "src", "dst",
+        iters = 3, levels = 2)
       val canon = res.groupBy("community").agg(min("node").as("__cl"))
       res.join(canon, Seq("community"))
         .select(col("node"), col("__cl").as("community"))
@@ -255,8 +255,8 @@ object CatalogML8 {
       val edges = pairs.select(col("a").as("src"), col("b").as("dst"), col("w"))
         .unionAll(pairs.select(col("b").as("src"), col("a").as("dst"),
           col("w")))
-      val res = graft.ops.Graph.louvainWeighted(edges, "src", "dst", "w",
-        iters = 3)
+      val res = graft.ops.Graph.louvain(edges, "src", "dst", iters = 3,
+        weightCol = Some("w"))
       val canon = res.groupBy("community").agg(min("node").as("__cl"))
       res.join(canon, Seq("community"))
         .select(col("node").as("part_id"), col("__cl").as("community"))

@@ -242,7 +242,8 @@ object CatalogML9 {
           col("w"))
         .unionAll(pairs.select(col("b").as("src"), col("a").as("dst"),
           col("w")))
-      graft.ops.Graph.pageRankWeighted(edges, "src", "dst", "w", iters = 3)
+      graft.ops.Graph.pageRank(edges, "src", "dst", iters = 3,
+          weightCol = Some("w"))
         .withColumnRenamed("node", "part_id")
         .orderBy("part_id")
     }, Some(graft.ops.Graph.pageRankWeightedSql(

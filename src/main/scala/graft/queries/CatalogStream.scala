@@ -197,9 +197,9 @@ object CatalogStream {
     // users, wave B the tail, wave C the stragglers (old timestamps
     // arriving two batches after the watermark advanced past them).
     // Three waves because Spark's stateful operators use TWO
-    // watermarks (empirically verified with tools.WaveProbe on this
-    // engine): batch k filters LATE INPUT with the watermark of batch
-    // k−1 (so wave B, at batch 1, is filtered with batch 0's initial
+    // watermarks (verified on this engine by logging each
+    // microbatch's watermark over a staged file source): batch k
+    // filters LATE INPUT with the watermark of batch k−1 (so wave B, at batch 1, is filtered with batch 0's initial
     // zero watermark — nothing drops) and EVICTS/EMITS state with the
     // watermark of batch k — so wave C, at batch 2, is filtered with
     // batch 1's watermark max(ts in A) − 1h, and that is where late
@@ -1240,9 +1240,9 @@ object CatalogStream {
     // crawl waves fold into an (edges, comm) pair through
     // foreachBatch, each microbatch re-running 3 deterministic warm
     // Louvain parity rounds SEEDED from the stored assignment
-    // (GraphState.advanceCommState / Graph.louvainWarm) — untouched
-    // communities re-stabilize in zero moves, only the delta's
-    // neighborhood re-settles, and recovery replays an interrupted
+    // (GraphState.advanceCommState / Graph.louvainLevel's warm seed)
+    // — untouched communities re-stabilize in zero moves, only the
+    // delta's neighborhood re-settles, and recovery replays an interrupted
     // advance bit-identically (the assignment is a pure function of
     // the two crash survivors: new edges + previous assignment).
     // Unlike the triangle/k-core views there is no from-scratch

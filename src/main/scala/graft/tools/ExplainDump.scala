@@ -2,22 +2,48 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions.col
 
-/** Dumps the formatted physical plans of the headline queries to
-  * PLANS.md — the artifact for plan review: scan pruning (ReadSchema),
-  * filter pushdown (PushedFilters), broadcast vs shuffle join selection,
-  * WholeStageCodegen spans, and exchange placement.
+/** Dumps formatted physical plans — the artifact for plan review: scan
+  * pruning (ReadSchema), filter pushdown (PushedFilters), broadcast vs
+  * shuffle join selection, WholeStageCodegen spans, and exchange
+  * placement.
+  *
+  * Usage: `runMain graft.tools.ExplainDump <sfDir> [--names a,b]
+  * [--out DIR] [--exec]`
+  *
+  *  - default: the headline queries, concatenated into `PLANS.md`;
+  *  - `--names a,b`: only those names (catalog queries, the lazy
+  *    overrides and the maintained-pair advance surfaces below);
+  *  - `--out DIR`: one `DIR/<name>.txt` per name instead of PLANS.md
+  *    (before/after evidence: dump into two directories and diff);
+  *  - `--exec`: execute each query first and dump the FINAL adaptive
+  *    plan (`isFinalPlan=true`) — the only view of AQE runtime
+  *    rewrites (SMJ→SHJ conversion, coalesced reads).
+  *
+  * The session is the engine's own conf posture
+  * ([[graft.engine.GraftEngine.sessionBuilder]]) at local[4].
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val out = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val usage = "usage: ExplainDump <sfDir> [--names a,b] [--out DIR] [--exec]"
+    var names: Option[Seq[String]] = None
+    var outDir: Option[String] = None
+    var exec = false
+    var positional = List.empty[String]
+    def parse(rest: List[String]): Unit = rest match {
+      case Nil =>
+      case "--names" :: v :: tl => names = Some(v.split(",").map(_.trim).toSeq); parse(tl)
+      case "--out" :: v :: tl => outDir = Some(v); parse(tl)
+      case "--exec" :: tl => exec = true; parse(tl)
+      case a :: tl if !a.startsWith("--") => positional :+= a; parse(tl)
+      case a :: _ => sys.error(s"unknown or incomplete flag $a; $usage")
+    }
+    parse(args.toList)
+    val sfDir = positional.headOption.getOrElse(sys.error(usage))
+    val spark = graft.engine.GraftEngine.sessionBuilder("local[4]", 4)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -99,18 +125,14 @@ object ExplainDump {
       // q122-q130 + q147 + q160 + q177 + q188 + q193 + q200 (streaming gate family) are deliberately absent: their
       // returned frame is a memory-sink scan, so a physical-plan dump
       // carries no information — their evidence is the DuckDB oracle
-      // (two-watermark arithmetic) + tools.WaveProbe + StreamOpsSpec
+      // (two-watermark arithmetic: late input is filtered with the
+      // previous batch's watermark, state evicted with the current
+      // one) + StreamOpsSpec
       "ivf_index_probe", "signature_index_probe")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of headline queries\n\n")
-    sb.append(s"Generated by `graft.tools.ExplainDump` on `$sfDir`.\n")
-    sb.append("Checkpoints: pruned ReadSchema, PushedFilters on scans, broadcast\n")
-    sb.append("joins for dims, TakeOrderedAndProject for top-k, partial aggregation\n")
-    sb.append("before exchanges, WholeStageCodegen coverage.\n\n")
     // q35's production path materializes eagerly (checkpoint + cache
     // release), which would collapse its dumped plan to the checkpoint
     // scan — dump the lazy formulation instead (same pipeline, full plan)
-    val lazyOverrides: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
+    val lazyOverrides: Map[String, (SparkSession, String) => DataFrame] =
       Map(
         "q35_dedup_minhash" -> ((s: SparkSession, d: String) =>
           graft.ops.Dedup.minhashJaccardPairs(
@@ -126,7 +148,6 @@ object ExplainDump {
         // pushed cent_id IN filter) and that no exchange carries the
         // packed codes or float vectors (shortlists/queries broadcast)
         "ivf_index_probe" -> ((s: SparkSession, d: String) => {
-          import org.apache.spark.sql.functions.col
           val emb = graft.ops.Tables.table(s, d, "embeddings")
           val queries = emb.where(col("vec_id") < 5)
             .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -149,7 +170,6 @@ object ExplainDump {
         // a raw index scan and its first join (only the new-crawl side
         // moves — SignatureIndexSpec asserts the same shape)
         "signature_index_probe" -> ((s: SparkSession, d: String) => {
-          import org.apache.spark.sql.functions.col
           val docs = graft.ops.Tables.table(s, d, "documents")
           val existing = docs.where(col("doc_id") % 5 =!= 0)
           val newCrawl = docs.where(col("doc_id") % 5 === 0)
@@ -164,73 +184,99 @@ object ExplainDump {
           graft.ops.Dedup.crossCorpusJaccardPairsFromIndex(s,
             "sig_idx_plans_b", "sig_idx_plans_s", newCrawl, existing,
             "doc_id", "text", threshold = 0.5, materialize = false)
-        })) ++ {
-      // the maintained graph pairs' ADVANCE plans (round-14 verdict
-      // What's-wrong #3): the *Plan surfaces GraphStateSpec audits,
-      // dumped where every other operator's plan lives. Checkpoints:
-      // scans are the state pair + the (checkpointed) delta only —
-      // never raw history — with the edge table broadcast-PROBED
-      // (one scan, no exchange on it) on the fresh-delta check.
-      import org.apache.spark.sql.functions.col
-      def pairsOf(s: SparkSession, d: String,
-                  pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
-        val li = graft.ops.Tables.table(s, d, "lineitem")
-          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
-          .select(col("l_orderkey"), col("l_partkey"))
-        li.join(li.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-            Seq("l_orderkey"))
-          .where(col("l_partkey") < col("__p2"))
-          .select(col("l_partkey").as("src"), col("__p2").as("dst"))
-      }
-      def scrub(s: SparkSession, name: String, derived: String): Unit =
-        graft.ops.Tables.dropTablesAndDirs(s,
-          s"${name}_edges", s"${name}_$derived",
-          s"${name}_edges__next", s"${name}_${derived}__next",
-          s"${name}_edges__old", s"${name}_${derived}__old")
-      Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame](
-        "triangle_advance_plan" -> ((s: SparkSession, d: String) => {
-          scrub(s, "plans_tri", "stats")
-          graft.ops.GraphState.initTriangleState(s, "plans_tri",
-            pairsOf(s, d, ok => ok % 3 =!= 0), "src", "dst")
-          graft.ops.GraphState.advanceTrianglePlan(s, "plans_tri",
-            pairsOf(s, d, ok => ok % 3 === 0), "src", "dst")._2
-        }),
-        "kcore_advance_plan" -> ((s: SparkSession, d: String) => {
-          scrub(s, "plans_kc", "core")
-          graft.ops.GraphState.initKCoreState(s, "plans_kc",
-            pairsOf(s, d, ok => ok % 3 =!= 0), "src", "dst", k = 20)
-          graft.ops.GraphState.advanceKCorePlan(s, "plans_kc",
-            pairsOf(s, d, ok => ok % 3 === 0), "src", "dst", k = 20)._2
-        }),
-        "comm_advance_plan" -> ((s: SparkSession, d: String) => {
-          scrub(s, "plans_cm", "comm")
-          graft.ops.GraphState.initCommState(s, "plans_cm",
-            pairsOf(s, d, ok => ok % 3 =!= 0), "src", "dst", iters = 2)
-          graft.ops.GraphState.advanceCommPlan(s, "plans_cm",
-            pairsOf(s, d, ok => ok % 3 === 0), "src", "dst", iters = 2)._2
-        }),
-        "anf_advance_plan" -> ((s: SparkSession, d: String) => {
-          scrub(s, "plans_anf", "anf")
-          graft.ops.GraphState.initAnfState(s, "plans_anf",
-            pairsOf(s, d, ok => ok % 3 =!= 0), "src", "dst", t = 2)
-          graft.ops.GraphState.advanceAnfPlan(s, "plans_anf",
-            pairsOf(s, d, ok => ok % 3 === 0), "src", "dst", t = 2)._2
         }))
+    val all = graft.queries.Catalog.queries ++ lazyOverrides ++ advancePlans
+    val selected = names.getOrElse(headline)
+    selected.filterNot(all.contains).foreach(n =>
+      System.err.println(s"[explain] unknown query: $n"))
+    val dumps = selected.filter(all.contains).sorted.map { name =>
+      val df = all(name)(spark, sfDir)
+      if (exec) df.collect()
+      // committed review artifacts: scratch paths are pid-keyed
+      // (LocalFiles.processScratchDir), so without masking every
+      // regeneration diffs on the JVM pid alone and the
+      // regenerate-and-diff plan-review workflow drowns in noise
+      name -> df.queryExecution.explainString(FormattedMode)
+        .replaceAll("-pid\\d+", "-pidXXXX")
     }
-    (graft.queries.Catalog.queries ++ lazyOverrides)
-      .filter(q => headline.contains(q._1)).toSeq.sortBy(_._1)
-      .foreach { case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        // the dump is a COMMITTED review artifact: scratch paths are
-        // pid-keyed (LocalFiles.processScratchDir), so without masking
-        // every regeneration diffs on the JVM pid alone and the
-        // regenerate-and-diff plan-review workflow drowns in noise
-        val stable = plan.replaceAll("-pid\\d+", "-pidXXXX")
-        sb.append(s"## $name\n\n```\n$stable\n```\n\n")
-      }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $out")
+    outDir match {
+      case Some(dir) =>
+        Files.createDirectories(Paths.get(dir))
+        dumps.foreach { case (name, plan) =>
+          Files.writeString(Paths.get(dir, s"$name.txt"), plan)
+          println(s"wrote $dir/$name.txt")
+        }
+      case None =>
+        val sb = new StringBuilder
+        sb.append("# PLANS — formatted physical plans of headline queries\n\n")
+        sb.append(s"Generated by `graft.tools.ExplainDump` on `$sfDir`.\n")
+        sb.append("Checkpoints: pruned ReadSchema, PushedFilters on scans, broadcast\n")
+        sb.append("joins for dims, TakeOrderedAndProject for top-k, partial aggregation\n")
+        sb.append("before exchanges, WholeStageCodegen coverage.\n\n")
+        dumps.foreach { case (name, plan) =>
+          sb.append(s"## $name\n\n```\n$plan\n```\n\n") }
+        Files.writeString(Paths.get("PLANS.md"), sb.toString)
+        println("wrote PLANS.md")
+    }
     spark.stop()
+  }
+
+  /** Edges of the co-order part graph (q220's) over the orders `pred`
+    * selects — the base and delta of the advance surfaces. */
+  private def pairsOf(s: SparkSession, d: String, pred: Column => Column): DataFrame = {
+    val li = graft.ops.Tables.table(s, d, "lineitem")
+      .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
+      .select(col("l_orderkey"), col("l_partkey"))
+    li.join(li.select(col("l_orderkey"), col("l_partkey").as("__p2")),
+        Seq("l_orderkey"))
+      .where(col("l_partkey") < col("__p2"))
+      .select(col("l_partkey").as("src"), col("__p2").as("dst"))
+  }
+
+  private def scrub(s: SparkSession, name: String, derived: String): Unit =
+    graft.ops.Tables.dropTablesAndDirs(s,
+      s"${name}_edges", s"${name}_$derived",
+      s"${name}_edges__next", s"${name}_${derived}__next",
+      s"${name}_edges__old", s"${name}_${derived}__old")
+
+  private def base(s: SparkSession, d: String): DataFrame = pairsOf(s, d, ok => ok % 3 =!= 0)
+  private def delta(s: SparkSession, d: String): DataFrame = pairsOf(s, d, ok => ok % 3 === 0)
+
+  /** The maintained graph pairs' ADVANCE plans: the *Plan surfaces
+    * GraphStateSpec audits, dumped where every other operator's plan
+    * lives. Checkpoints: scans are the state pair + the (checkpointed)
+    * delta only — never raw history — with the edge table
+    * broadcast-PROBED (one scan, no exchange on it) on the fresh-delta
+    * check. */
+  private val advancePlans: Map[String, (SparkSession, String) => DataFrame] = {
+    import graft.ops.{GraphState => G}
+    Map(
+      "triangle_advance_plan" -> { (s, d) =>
+        scrub(s, "plans_tri", "stats")
+        G.initTriangleState(s, "plans_tri", base(s, d), "src", "dst")
+        G.advanceTrianglePlan(s, "plans_tri", delta(s, d), "src", "dst")._2
+      },
+      "kcore_advance_plan" -> { (s, d) =>
+        scrub(s, "plans_kc", "core")
+        G.initKCoreState(s, "plans_kc", base(s, d), "src", "dst", k = 20)
+        G.advanceKCorePlan(s, "plans_kc", delta(s, d), "src", "dst", k = 20)._2
+      },
+      "kcore_retract_plan" -> { (s, d) =>
+        scrub(s, "plans_kcr", "core")
+        G.initKCoreState(s, "plans_kcr", base(s, d), "src", "dst", k = 20)
+        G.retractKCorePlan(s, "plans_kcr",
+          base(s, d).where((col("src") + col("dst")) % 11 === 0),
+          "src", "dst", k = 20)._2
+      },
+      "comm_advance_plan" -> { (s, d) =>
+        scrub(s, "plans_cm", "comm")
+        G.initCommState(s, "plans_cm", base(s, d), "src", "dst", iters = 2)
+        G.advanceCommPlan(s, "plans_cm", delta(s, d), "src", "dst", iters = 2)._2
+      },
+      "anf_advance_plan" -> { (s, d) =>
+        scrub(s, "plans_anf", "anf")
+        G.initAnfState(s, "plans_anf", base(s, d), "src", "dst", t = 2)
+        G.advanceAnfPlan(s, "plans_anf", delta(s, d), "src", "dst", t = 2)._2
+      })
   }
 }

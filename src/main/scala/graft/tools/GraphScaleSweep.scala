@@ -80,8 +80,7 @@ object GraphScaleSweep {
       }
       if (opsRun("multilevel")) {
         val (tMl, nc2) = time {
-          Graph.louvainMultiLevel(sym, "src", "dst", itersPerLevel = 3,
-              levels = 2)
+          Graph.louvain(sym, "src", "dst", iters = 3, levels = 2)
             .agg(countDistinct("community")).head().getLong(0)
         }
         println(f"| louvain 2-level | $copies | $n | $tMl%.2f | comms=$nc2 |")
@@ -151,10 +150,10 @@ object GraphScaleSweep {
       }
       if (opsRun("kcoreinc")) {
         // incremental k-core advance vs the full fixed-point re-peel:
-        // 1%-of-orders edge delta (the TriangleDeltaAb scenario), base
-        // core materialized UNTIMED (it exists in the maintenance
-        // scenario); both legs at the k=55 fixture the q231 oracle
-        // uses, checksums compared
+        // 1%-of-orders edge delta (SCALING.md's incremental triangle
+        // maintenance scenario), base core materialized UNTIMED (it
+        // exists in the maintenance scenario); both legs at the k=55
+        // fixture the q231 oracle uses, checksums compared
         val lik = graft.ops.Tables.table(spark, sfDir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"))
         def pairsAt(pred: org.apache.spark.sql.Column) = {
@@ -219,10 +218,10 @@ object GraphScaleSweep {
         // WARM community maintenance vs cold re-clustering (q238's
         // posture): 1%-of-orders edge delta lands on a stabilized
         // assignment (seed materialized UNTIMED — it exists in the
-        // maintenance scenario); both legs run louvainStable to the
-        // same 12-round cap, so the rounds column IS the measured
-        // saving. Assignments are local optima, not comparable by
-        // hash — the check column records community counts.
+        // maintenance scenario); both legs run the stability-stopped
+        // Louvain core to the same 12-round cap, so the rounds column
+        // IS the measured saving. Assignments are local optima, not
+        // comparable by hash — the check column records community counts.
         val lik = graft.ops.Tables.table(spark, sfDir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"))
         def pairsAt(pred: org.apache.spark.sql.Column) = {
@@ -235,20 +234,22 @@ object GraphScaleSweep {
                 (col("__p2") + i * 1000000000L).as("dst")))
             .reduce(_.unionAll(_))
         }
-        def symOf(df: org.apache.spark.sql.DataFrame) =
-          df.unionAll(df.select(col("dst").as("src"), col("src").as("dst")))
+        def stable(df: org.apache.spark.sql.DataFrame,
+                   seed: Option[org.apache.spark.sql.DataFrame]) =
+          Graph.louvainLevel(Graph.louvainEdges(
+              df.unionAll(df.select(col("dst").as("src"), col("src").as("dst"))),
+              "src", "dst", None),
+            12, coarse = false, seed = seed, stopAtStable = true)
         val cb = pairsAt(col("l_orderkey") % 100 =!= 0).distinct()
           .localCheckpoint()
         val cu = pairsAt(lit(true)).distinct().localCheckpoint()
-        val seed = Graph.louvainStable(symOf(cb), "src", "dst", None, 12)
-          ._1.localCheckpoint()
+        val seed = stable(cb, None)._1.localCheckpoint()
         val (tWarm, (ncW, rW)) = time {
-          val (df, r) = Graph.louvainStable(symOf(cu), "src", "dst",
-            Some(seed), 12)
+          val (df, r) = stable(cu, Some(seed))
           (df.agg(countDistinct("community")).head().getLong(0), r)
         }
         val (tCold, (ncC, rC)) = time {
-          val (df, r) = Graph.louvainStable(symOf(cu), "src", "dst", None, 12)
+          val (df, r) = stable(cu, None)
           (df.agg(countDistinct("community")).head().getLong(0), r)
         }
         println(f"| comm warm | $copies | $n | cold $tCold%.2f (r$rC) / warm $tWarm%.2f (r$rW) | comms=$ncC/$ncW |")

@@ -105,8 +105,9 @@ object ScalingCurve {
       "q144",
       // tree-probed IVF at the catalog's fixture-sized tree (nlist=16,
       // ntop=4): corpus-side assignment scan + fixed 20-query probe —
-      // q46's class; the LARGE-nlist probe economics are measured in
-      // tools.TreeProbeAb (flat is N·nlist, tree is N·(ntop+w·nlist/ntop))
+      // q46's class; the LARGE-nlist probe economics are in SCALING.md,
+      // "Round-9 addition: the coarse-quantizer TREE probe measured at
+      // production nlist" (flat is N·nlist, tree is N·(ntop+w·nlist/ntop))
       "q145",
       // sentence-aware chunking: row-local derivation + one compiled
       // SentencePack generator per doc — q111's near-flat class

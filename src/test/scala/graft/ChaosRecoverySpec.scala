@@ -15,9 +15,9 @@ import graft.model.ConsumerConfig
 /** Failure-injection evidence for the delivery layer (round-11 verdict
   * #9): kill the relay MID-MICROBATCH during a staged catch-up,
   * restart from the same checkpoint, and assert the recovery contract
-  * the AdmissionSweep table implies — no record lost, and the
-  * at-least-once duplicate window bounded by EXACTLY the one
-  * microbatch the kill interrupted (whose size the admission cap
+  * SCALING.md's "Admission-control sweep" table implies — no record
+  * lost, and the at-least-once duplicate window bounded by EXACTLY the
+  * one microbatch the kill interrupted (whose size the admission cap
   * bounds in turn). This is the quantitative link between the cap
   * knob and recovery cost: at a cap of `c` files, a crash costs at
   * most one `c`-file unit of re-sent work, never a restart of the

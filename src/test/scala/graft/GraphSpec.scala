@@ -3,9 +3,18 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.Graph
 
-/** [[graft.ops.Graph.pageRank]] — fixed-iteration power method. */
+/** [[graft.ops.Graph]] — PageRank, Louvain and the rest of the graph
+  * family. */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The stability-stopped Louvain core over unit edges — the warm
+    * path the maintained community pair runs. */
+  private def louvainStable(edges: org.apache.spark.sql.DataFrame,
+                            seed: Option[org.apache.spark.sql.DataFrame],
+                            rounds: Int): (org.apache.spark.sql.DataFrame, Int) =
+    Graph.louvainLevel(Graph.louvainEdges(edges, "src", "dst", None),
+      rounds, coarse = false, seed = seed, stopAtStable = true)
 
   private def ranks(edges: Seq[(Long, Long)], iters: Int): Map[Long, Double] =
     Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", iters)
@@ -80,8 +89,8 @@ class GraphSpec extends SparkSpec {
     val a = Seq((1L, 2L), (2L, 3L), (3L, 1L))
     val b = Seq((10L, 11L), (11L, 12L), (12L, 10L))
     val edges = a ++ b
-    val got = Graph.personalizedPageRank(edges.toDF("src", "dst"),
-        "src", "dst", Seq(1L, 999L).toDF("node"), "node", iters = 4)
+    val got = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst",
+        iters = 4, seeds = Some(Seq(1L, 999L).toDF("node")))
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._3).toMap
     // seed 999 is not in the graph and must be ignored (|S| = 1)
     // component B is unreachable from the seed -> exact zero
@@ -177,13 +186,13 @@ class GraphSpec extends SparkSpec {
 
     // the stability stop must be INVISIBLE to a fixed-depth run — the
     // oracle-replay invariant: a stopped run equals the full unroll
-    val (stable, rounds) = Graph.louvainStable(base, "src", "dst", None, 10)
+    val (stable, rounds) = louvainStable(base, None, 10)
     assert(m(stable) == m(Graph.louvain(base, "src", "dst", iters = 10)),
       "stability-stopped run must equal the fixed-depth run")
     assert(rounds < 10, "the clique fixture must stabilize before 10 rounds")
 
     // a converged assignment is a fixed point of the warm run
-    val (again, r2) = Graph.louvainStable(base, "src", "dst", Some(stable), 10)
+    val (again, r2) = louvainStable(base, Some(stable), 10)
     assert(m(again) == m(stable), "converged seed must be a fixed point")
     assert(r2 == 2, "a fixed-point seed stops after the two probe rounds")
 
@@ -195,13 +204,13 @@ class GraphSpec extends SparkSpec {
     // must spend re-agglomerating the cliques from singletons.
     val union = (cliqueA ++ cliqueB ++ bridge ++
       Seq((14L, 20L), (20L, 14L))).toDF("src", "dst")
-    val (warm, rWarm) = Graph.louvainStable(union, "src", "dst", Some(stable), 12)
+    val (warm, rWarm) = louvainStable(union, Some(stable), 12)
     val wm = m(warm)
     val sm = m(stable)
     (0L to 4L).foreach(n => assert(wm(n) == sm(n), s"clique A node $n moved"))
     (10L to 14L).foreach(n => assert(wm(n) == sm(n), s"clique B node $n moved"))
     assert(wm(20L) == wm(14L), "the pendant must join clique B's community")
-    val (_, rCold) = Graph.louvainStable(union, "src", "dst", None, 12)
+    val (_, rCold) = louvainStable(union, None, 12)
     assert(rWarm < rCold, s"warm ($rWarm) must save rounds vs cold ($rCold)")
   }
 
@@ -257,12 +266,13 @@ class GraphSpec extends SparkSpec {
       .toDF("src", "dst", "w")
     val unit = (und.flatMap(e => Seq.fill(3)(Seq(e, e.swap)).flatten) ++
       bridge.flatMap(e => Seq(e, e.swap))).toDF("src", "dst")
-    val a = Graph.louvainWeighted(wEdges, "src", "dst", "w", iters = 4)
+    val a = Graph.louvain(wEdges, "src", "dst", iters = 4, weightCol = Some("w"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // the unit-edge multigraph through the weighted API with w = 1
     // per parallel row must agree (weights are multiplicities)
-    val b = Graph.louvainWeighted(unit.withColumn("w",
-        org.apache.spark.sql.functions.lit(1L)), "src", "dst", "w", 4)
+    val b = Graph.louvain(unit.withColumn("w",
+        org.apache.spark.sql.functions.lit(1L)), "src", "dst", 4,
+        weightCol = Some("w"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a === b, "weight-3 edges must equal 3 parallel unit edges")
     assert(Set(1L, 2L, 3L).map(a).size == 1 &&
@@ -290,8 +300,7 @@ class GraphSpec extends SparkSpec {
     val edges = (cliques ++ bridges).toDF("src", "dst")
     val single = Graph.louvain(edges, "src", "dst", iters = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val multi = Graph.louvainMultiLevel(edges, "src", "dst",
-        itersPerLevel = 4, levels = 2)
+    val multi = Graph.louvain(edges, "src", "dst", iters = 4, levels = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // exact integer modularity comparison (Q·(2m)² units)
     val es = edges.as[(Long, Long)].collect()
@@ -317,13 +326,12 @@ class GraphSpec extends SparkSpec {
         "a level-1 community must map into ONE multi-level community")
     }
     // levels = 1 is exactly the single-level operator
-    val one = Graph.louvainMultiLevel(edges, "src", "dst",
-        itersPerLevel = 4, levels = 1)
+    val one = Graph.louvain(edges, "src", "dst", iters = 4, levels = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(one === single)
     // determinism under repartitioning
-    val again = Graph.louvainMultiLevel(edges.repartition(5), "src", "dst",
-        itersPerLevel = 4, levels = 2)
+    val again = Graph.louvain(edges.repartition(5), "src", "dst",
+        iters = 4, levels = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again === multi)
   }
@@ -566,23 +574,23 @@ class GraphSpec extends SparkSpec {
       df.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     // the exact-replay law: warm rounds continue the quantized sequence
     val cold2 = Graph.pageRank(edges, "src", "dst", iters = 2)
-    val cont = Graph.pageRankFrom(edges, "src", "dst",
-      cold2.select(col("node"), col("rank")), iters = 1)
+    val cont = Graph.pageRank(edges, "src", "dst", iters = 1,
+      start = Some(cold2.select(col("node"), col("rank"))))
     assert(m(cont) == m(Graph.pageRank(edges, "src", "dst", iters = 3)),
-      "pageRankFrom(pageRank(T1), T2) must equal pageRank(T1+T2) to the bit")
+      "pageRank(T2, start = pageRank(T1)) must equal pageRank(T1+T2) to the bit")
     // an empty start vector degenerates to the uniform cold start
     val empty = Seq.empty[(Long, Double)].toDF("node", "rank")
-    assert(m(Graph.pageRankFrom(edges, "src", "dst", empty, iters = 2)) ==
-      m(cold2))
+    assert(m(Graph.pageRank(edges, "src", "dst", iters = 2,
+      start = Some(empty))) == m(cold2))
     // grown graph: node 5 is new — absent from the start vector, it
     // enters at 1/N of the NEW graph; present nodes keep their rank
     val grown = edges.unionAll(Seq((5L, 2L), (3L, 5L)).toDF("src", "dst"))
-    val warm = Graph.pageRankFrom(grown, "src", "dst",
-      cold2.select(col("node"), col("rank")), iters = 1)
+    val warm = Graph.pageRank(grown, "src", "dst", iters = 1,
+      start = Some(cold2.select(col("node"), col("rank"))))
     assert(warm.collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L, 5L))
     // partition independence of the warm path
-    val again = Graph.pageRankFrom(grown.repartition(5), "src", "dst",
-      cold2.select(col("node"), col("rank")).repartition(3), iters = 1)
+    val again = Graph.pageRank(grown.repartition(5), "src", "dst", iters = 1,
+      start = Some(cold2.select(col("node"), col("rank")).repartition(3)))
     assert(m(again) == m(warm))
   }
 
@@ -791,8 +799,8 @@ class GraphSpec extends SparkSpec {
       (1L, 3L, 2L), (3L, 2L, 1L))
     val expanded = weighted.flatMap { case (s, d, w) =>
       Seq.fill(w.toInt)((s, d)) }
-    val got = Graph.pageRankWeighted(weighted.toDF("src", "dst", "w"),
-        "src", "dst", "w", iters = 3)
+    val got = Graph.pageRank(weighted.toDF("src", "dst", "w"),
+        "src", "dst", iters = 3, weightCol = Some("w"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(_._1)
     val want = Graph.pageRank(expanded.toDF("src", "dst"), "src", "dst",
@@ -809,19 +817,55 @@ class GraphSpec extends SparkSpec {
       assert(math.abs(rw - ru) < 1e-9, s"node $n: $rw vs $ru")
     }
     // determinism under repartitioning
-    val again = Graph.pageRankWeighted(
+    val again = Graph.pageRank(
         weighted.toDF("src", "dst", "w").repartition(5),
-        "src", "dst", "w", iters = 3)
+        "src", "dst", iters = 3, weightCol = Some("w"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .sortBy(_._1)
     assert(again.toSeq == got.toSeq)
     // a negative multiplicity would silently corrupt every rank —
     // the precondition is validated, not assumed
     val neg = intercept[IllegalArgumentException] {
-      Graph.pageRankWeighted(
+      Graph.pageRank(
         Seq((1L, 2L, 3L), (2L, 1L, -1L)).toDF("src", "dst", "w"),
-        "src", "dst", "w", iters = 1)
+        "src", "dst", iters = 1, weightCol = Some("w"))
     }
     assert(neg.getMessage.contains("non-negative"))
+  }
+
+  test("pageRank laws: all-1 weights and an all-node seed set each equal the unit path to the bit") {
+    // dangling nodes (7, 8), a parallel edge (1→2 twice), a self-loop
+    val edges = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L),
+      (4L, 4L), (4L, 5L), (5L, 1L), (6L, 1L), (2L, 7L), (5L, 8L))
+    def m(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
+      df.collect().map(r => r.getLong(0) -> (r.getLong(1) -> r.getDouble(2))).toMap
+    val unit = m(Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", iters = 5))
+    val weighted = m(Graph.pageRank(
+      edges.map { case (a, b) => (a, b, 1L) }.toDF("src", "dst", "w"),
+      "src", "dst", iters = 5, weightCol = Some("w")))
+    assert(weighted == unit, "w = 1 everywhere must replay the unit path exactly")
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.toDF("node")
+    val seeded = m(Graph.pageRank(edges.toDF("src", "dst"), "src", "dst",
+      iters = 5, seeds = Some(nodes)))
+    assert(seeded == unit, "every node a seed must replay the unit path exactly")
+  }
+
+  test("louvain law: weighted path on self-loop-free unit weights equals the unit path") {
+    val rnd = new scala.util.Random(11)
+    val und = ((for (_ <- 1 to 120) yield
+        (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)) ++
+      (for (i <- 50L to 54L; j <- 50L to 54L if i < j) yield (i, j)))
+      .filter(e => e._1 != e._2).distinct
+    val sym = und ++ und.map(_.swap)
+    def m(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val unit = sym.toDF("src", "dst")
+    val weighted = sym.map { case (a, b) => (a, b, 1L) }.toDF("src", "dst", "w")
+    for (levels <- Seq(1, 2)) {
+      val a = m(Graph.louvain(unit, "src", "dst", iters = 4, levels = levels))
+      val b = m(Graph.louvain(weighted, "src", "dst", iters = 4,
+        weightCol = Some("w"), levels = levels))
+      assert(a == b, s"levels=$levels: weighted unit edges must equal the unit path")
+    }
   }
 }

@@ -217,15 +217,18 @@ class GraphStateSpec extends SparkSpec {
         pairsOf(ok => ok % 3 === w), "src", "dst", iters = 3)
     val got = m(GraphState.communities(spark, name))
     // the maintained assignment must equal the SAME warm chain replayed
-    // through the public surface over the cumulative edge sets — the
-    // q238 oracle's exact process
+    // through the stability-stopped Louvain core over the cumulative
+    // edge sets — the q238 oracle's exact process
     def symCum(w: Int): DataFrame = {
       val p = pairsOf(ok => ok % 3 <= w).distinct()
       p.unionAll(p.select(col("dst").as("src"), col("src").as("dst")))
     }
-    val c1 = Graph.louvainStable(symCum(0), "src", "dst", None, 3)._1
-    val c2 = Graph.louvainStable(symCum(1), "src", "dst", Some(c1), 3)._1
-    val c3 = Graph.louvainStable(symCum(2), "src", "dst", Some(c2), 3)._1
+    def stable(e: DataFrame, seed: Option[DataFrame]): DataFrame =
+      Graph.louvainLevel(Graph.louvainEdges(e, "src", "dst", None), 3,
+        coarse = false, seed = seed, stopAtStable = true)._1
+    val c1 = stable(symCum(0), None)
+    val c2 = stable(symCum(1), Some(c1))
+    val c3 = stable(symCum(2), Some(c2))
     assert(got == m(c3), "maintained ≡ replayed warm chain")
     assert(GraphState.epochOf(spark, s"${name}_comm") == 3L)
 
@@ -381,6 +384,45 @@ class GraphStateSpec extends SparkSpec {
     assert(GraphState.recoverTriangleState(spark, name) == "rebuilt-stats")
     assert(sortedStats(GraphState.stats(spark, name)) == maintained,
       "crash-rebuild must equal the uncrashed maintained stats")
+    scrub(name)
+  }
+
+  test("an advance leaves no thread holding its session as active") {
+    import java.util.concurrent.{CompletableFuture, ConcurrentLinkedQueue,
+      CountDownLatch, ForkJoinPool, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.SparkSession
+    val name = "gstate_sess"
+    scrub(name)
+    // a session of its own, so a leaked active session is identifiable
+    val s2 = spark.newSession()
+    def edgesOf(es: (Long, Long)*): DataFrame =
+      s2.createDataFrame(es).toDF("src", "dst")
+    GraphState.initTriangleState(s2, name, edgesOf((1L, 2L), (2L, 3L)),
+      "src", "dst")
+    val before = SparkSession.getActiveSession
+    GraphState.advanceTriangleState(s2, name, edgesOf((3L, 1L), (3L, 4L)),
+      "src", "dst")
+    assert(SparkSession.getActiveSession.map(System.identityHashCode) ==
+      before.map(System.identityHashCode),
+      "the advancing thread's active session changed")
+    // fill EVERY common-pool worker with a latched task: each records
+    // the active session it sees, then holds its worker until all n
+    // have arrived, so no worker can run two probes
+    val n = ForkJoinPool.commonPool().getParallelism
+    val arrived = new CountDownLatch(n)
+    val seen = new ConcurrentLinkedQueue[Option[SparkSession]]()
+    val tasks = (1 to n).map(_ => CompletableFuture.runAsync { () =>
+      seen.add(SparkSession.getActiveSession)
+      arrived.countDown()
+      arrived.await(60, TimeUnit.SECONDS)
+      ()
+    })
+    tasks.foreach(_.join())
+    assert(arrived.getCount == 0,
+      s"only ${n - arrived.getCount} of $n workers ran a probe")
+    assert(!seen.asScala.exists(_.exists(_ eq s2)),
+      "a pooled worker still carries the advance's session as active")
     scrub(name)
   }
 
